@@ -22,7 +22,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import MapConfig, DEFAULT_CONFIG
-from .pipeline import build_street_network
+from .pipeline import build_street_network, convert_features
 
 MANIFEST = "_manifest.json"
 
@@ -71,36 +71,28 @@ def run_checkpointed(spark: SparkSession, docs: DataFrame, out_root: str,
     reused (resume-from-checkpoint); change the fingerprint to force
     recompute. Returns {stage: manifest}."""
     os.makedirs(out_root, exist_ok=True)
-    manifests: dict[str, dict] = {}
-
     stages = ["roads", "intersections", "features"]
-    done = {}
+    manifests: dict[str, dict] = {}
     for s in stages:
         m = _load_manifest(os.path.join(out_root, s))
         if m and m.get("fingerprint") == fingerprint:
-            done[s] = m
-    if len(done) == len(stages):
-        return done  # fully resumable — nothing to do
-
-    net = build_street_network(spark, docs, cfg)
-    for s in stages:
-        path = os.path.join(out_root, s)
-        m = _load_manifest(path)
-        if m and m.get("fingerprint") == fingerprint:
             manifests[s] = m
-            continue
-        df = net[s]
+    todo = [s for s in stages if s not in manifests]
+    # the distributed network runs jobs while it is built (eager
+    # checkpoints), so it is built only when a snapshot still needs it
+    net = (build_street_network(spark, docs, cfg)
+           if {"roads", "intersections"} & set(todo) else {})
+    for s in todo:
         if s == "features":
-            df = df.select("doc_id", "feature_type", "feature_id",
-                           "feature_json", "tile_z", "tile_x", "tile_y",
-                           "quadkey")
+            df = convert_features(docs, cfg)
         elif s == "roads":
-            df = df.select("doc_id", "road_id", "way_id", "osm_way_ids",
-                           "src_i", "dst_i", "highway_type", "name",
-                           "lane_chars", "dir_chars", "total_width",
-                           "trimmed_length", "center_xy")
+            df = net[s].select("doc_id", "road_id", "way_id", "osm_way_ids",
+                               "src_i", "dst_i", "highway_type", "name",
+                               "lane_chars", "dir_chars", "total_width",
+                               "trimmed_length", "center_xy")
         else:
-            df = df.select("doc_id", "i_id", "qx", "qy", "kind", "control",
-                           "movements_json", "polygon_xy")
-        manifests[s] = _write_snapshot(df, path, s, fingerprint)
-    return manifests
+            df = net[s].select("doc_id", "i_id", "qx", "qy", "kind",
+                               "control", "movements_json", "polygon_xy")
+        manifests[s] = _write_snapshot(df, os.path.join(out_root, s), s,
+                                       fingerprint)
+    return {s: manifests[s] for s in stages}

@@ -4,9 +4,9 @@ Reference osm2streets-py/src/lib.rs:353-386 (overwrite_osm_tags_for_way
 → re-infer lanes, recompute touched geometry) and :388-427 (point calls
 to collapse/zip ops). In the corpus engine an edit touches exactly one
 document, so the delta recompute is: rewrite that doc's spans → rerun
-the (stateless) pipeline on the 1-doc frame → splice the results over
-the previous snapshot (anti-join out the doc, union the fresh rows —
-Iceberg MERGE INTO in production, parquet rewrite here).
+the (stateless) per-document kernel on the 1-doc frame → splice the
+results over the previous snapshot (anti-join out the doc, union the
+fresh rows — Iceberg MERGE INTO in production, parquet rewrite here).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import MapConfig, DEFAULT_CONFIG
-from .pipeline import build_street_network
+from .pipeline import convert_features
 
 
 def overwrite_way_tags(docs: DataFrame, doc_id: str, way_id: int,
@@ -67,12 +67,8 @@ def overwrite_way_tags(docs: DataFrame, doc_id: str, way_id: int,
 def recompute_doc_features(spark: SparkSession, docs: DataFrame,
                            doc_id: str,
                            cfg: MapConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Delta recompute: run the full pipeline on ONE document."""
-    one = docs.where(F.col("doc_id") == doc_id)
-    net = build_street_network(spark, one, cfg, docs_hint=1)
-    return net["features"].select(
-        "doc_id", "feature_type", "feature_id", "feature_json",
-        "tile_z", "tile_x", "tile_y", "quadkey")
+    """Delta recompute: run the per-document kernel on ONE document."""
+    return convert_features(docs.where(F.col("doc_id") == doc_id), cfg)
 
 
 def splice_features(prev_features: DataFrame,

@@ -269,7 +269,7 @@ def run_reference_parity(spark, areas: list[str] | None = None) -> dict:
         area_driving_side, list_reference_areas, load_golden,
         reference_documents,
     )
-    from .pipeline import build_street_network
+    from .pipeline import convert_features
 
     areas = areas or list_reference_areas()
     by_side = defaultdict(list)
@@ -284,12 +284,9 @@ def run_reference_parity(spark, areas: list[str] | None = None) -> dict:
         # kept, no sidewalk inference (osm2lanes/src/lib.rs:588);
         # standard_for_clipped_areas keeps disconnected roads
         # (transform/mod.rs:21-29)
-        net = build_street_network(
-            spark, docs,
-            cfg=MapConfig(driving_side=side, inferred_sidewalks=False,
-                          remove_disconnected=False),
-            docs_hint=len(group))
-        feats = (net["features"]
+        cfg = MapConfig(driving_side=side, inferred_sidewalks=False,
+                        remove_disconnected=False)
+        feats = (convert_features(docs, cfg)
                  .select("doc_id", "feature_json")
                  .groupBy("doc_id")
                  .agg({"feature_json": "collect_list"})

@@ -14,6 +14,15 @@ document at a time in plain Python — no Spark. Two jobs:
    the trims pivot, the pass-1 candidate gate, imerge plumbing, Arrow
    batch boundaries, id hashing. Those are where distributed bugs live
    (both round-1 red CORRECTNESS rows were exactly that class).
+   The flagship feature table is THIS kernel run inside one
+   mapInPandas (pipeline.convert_features), so sn_geojson_features
+   against gt_features is a replay-vs-replay check: it still catches
+   Spark I/O, schema and ordering bugs, but it is not independent
+   evidence of the geometry. The render-layer gt tables (lane
+   polygons, surfaces, markings, corners, stop lines) join it once
+   their queries move off the distributed plan; sn_transformed_roads
+   and sn_movements still compare the distributed plan against the
+   replay.
 
 2. Single-node throughput baseline: the reference publishes no numbers
    (BASELINE.md), so this replay IS the single-node engine to beat —

@@ -12,10 +12,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def env_int(name: str, default: int) -> int:
+    """The positive integer in environment variable `name`. Unset, empty,
+    zero or negative gives `default`; anything that is not an integer
+    raises ValueError naming the variable, before it can reach a Spark
+    conf or a partition count."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"{name}={raw!r}: expected a positive integer") from None
+    return value if value > 0 else default
+
+
 def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cores = env_int("SPARK_GRAFT_CPUS", 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
         # 1x cores: our shuffles are byte-small, so AQE's coalesce
         # floor (minPartitionNum=cores) is where every over-provisioned
@@ -27,8 +43,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # it data-proportionally instead (scaling-criterion runs: same
         # task list at every cluster size — see kernel_partitions).
         shuffle_partitions = (
-            int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0"))
-            or cores)
+            env_int("SPARK_GRAFT_SHUFFLE_PARTITIONS", 0) or cores)
     builder = (
         SparkSession.builder.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -50,7 +65,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
+                str(env_int("SPARK_GRAFT_ARROW_BATCH", 2048)))
         .config("spark.sql.session.timeZone", "UTC")
         # static conf, must be set at session build: the default
         # 100-entry codegen class cache thrashes on the flagship's ~236
@@ -62,7 +77,7 @@ def get_spark(app: str = "osm2streets-spark", cores: int | None = None,
         # bounded (~2k classes); it caches compiled bytecode, never
         # data or results.
         .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
+                str(env_int("SPARK_GRAFT_CODEGEN_CACHE", 2000)))
         # PySpark 4 wraps every DataFrame op in a call-site capture
         # (2+ Py4J RPCs per op, for richer error messages). The
         # flagship's deep plans issue ~700 ops per build; the capture
@@ -93,11 +108,11 @@ DOCS_PER_TEXT_PARTITION = 128
 def docs_partitions(spark: SparkSession, n_docs: int,
                     factor: int = 4) -> int:
     """Partition count for Python-CPU-heavy scans of a documents table
-    (shingle/fingerprint pandas UDFs). Same sizing rule as
-    kernel_partitions — data-proportional (≥ DOCS_PER_KERNEL_PARTITION
-    docs per task) with a floor at the core count and a cores×factor
-    cap — but takes the row count directly (parquet footer) instead of
-    the session-conf hint. Rationale (r8): the driver's documents table
+    (shingle/fingerprint pandas UDFs). Data-proportional like
+    kernel_partitions — ~DOCS_PER_TEXT_PARTITION docs per task with a
+    cores×factor cap — but with NO floor at the core count (see below),
+    and it takes the row count directly (parquet footer) instead of the
+    session-conf hint. Rationale (r8): the driver's documents table
     is ONE small parquet file, so the file-split scan runs the whole
     shingle/fingerprint UDF on a single core; an explicit doc_id
     repartition sized to the data restores cluster-width parallelism
@@ -105,8 +120,8 @@ def docs_partitions(spark: SparkSession, n_docs: int,
     (at 100 TB the table is bucketed by doc_id and the shuffle
     disappears; SPARK_GRAFT_DOC_PARTITIONS pins the count for
     criterion runs, like the other two knobs)."""
-    pinned = int(os.environ.get("SPARK_GRAFT_DOC_PARTITIONS", "0"))
-    if pinned > 0:
+    pinned = env_int("SPARK_GRAFT_DOC_PARTITIONS", 0)
+    if pinned:
         return pinned
     cores = spark.sparkContext.defaultParallelism
     if n_docs <= 0:
@@ -141,8 +156,8 @@ def kernel_partitions(spark: SparkSession, factor: int = 4) -> int:
     measured the cores×factor default paying ~3.8× the per-task fixed
     JVM cost at 16c vs 4c for the same corpus, a pure asymmetry that
     the criterion measurement eliminates by pinning."""
-    pinned = int(os.environ.get("SPARK_GRAFT_KERNEL_PARTITIONS", "0"))
-    if pinned > 0:
+    pinned = env_int("SPARK_GRAFT_KERNEL_PARTITIONS", 0)
+    if pinned:
         return pinned
     cores = spark.sparkContext.defaultParallelism
     n = cores * factor

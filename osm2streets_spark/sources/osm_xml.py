@@ -12,7 +12,12 @@ alternative (three separate UDF passes) would parse each XML three times.
 
 Missing-node-ref handling matches reader.rs:93-99: a way keeps only nd
 refs that resolved to a parsed node; ways left with <2 points are
-dropped at split time.
+dropped at split time. Malformed elements drop the same way, so one bad
+document never aborts the task that parses it: a node, way or relation
+whose id is not an integer, a node whose lon/lat is not a number within
+±180/±90 (NaN included), an nd or relation member whose ref is not an
+integer, and a PBF payload that is not base64 (like unparseable XML)
+contribute nothing.
 """
 
 from __future__ import annotations
@@ -40,6 +45,25 @@ PARSED_SCHEMA = StructType([
 ])
 
 
+def _int(value: str | None) -> int | None:
+    """An OSM id/ref attribute as int; None when absent or malformed."""
+    try:
+        return int(value)
+    except (TypeError, ValueError):
+        return None
+
+
+def _coord(value: str | None, limit: float) -> float | None:
+    """A lon (limit 180) or lat (limit 90) attribute as a float within
+    ±limit; None when absent, not a number, NaN or out of range (a
+    latitude beyond ±90 makes the tile projection raise)."""
+    try:
+        v = float(value)
+    except (TypeError, ValueError):
+        return None
+    return v if -limit <= v <= limit else None
+
+
 def _parse_one_doc(doc_id: str, spans, rows: list) -> None:
     import xml.etree.ElementTree as ET
 
@@ -60,13 +84,17 @@ def _parse_one_doc(doc_id: str, spans, rows: list) -> None:
         # S1 PBF half (reader.rs:23-148 dispatches XML vs PBF): the
         # base64 span payloads concatenate to the .osm.pbf bytes
         import base64
+        import binascii
 
         from .osm_pbf import parse_pbf
 
         # concatenate the base64 texts BEFORE decoding: per-span decode
         # is only valid when each span's length is a multiple of 4, an
         # accident of the fixture CHUNK size we must not depend on
-        data = base64.b64decode("".join(s["text"] for s in pbf_frags))
+        try:
+            data = base64.b64decode("".join(s["text"] for s in pbf_frags))
+        except binascii.Error:
+            data = b""  # a payload that is not base64 contributes nothing
         nodes, pways, prels = parse_pbf(data)
         for wid, refs, tags_json in pways:
             refs = [r for r in refs if r in nodes]  # reader.rs:93-99
@@ -81,24 +109,28 @@ def _parse_one_doc(doc_id: str, spans, rows: list) -> None:
     except ET.ParseError:
         root = []  # malformed XML spans contribute nothing
     for el in root:
+        osm_id = _int(el.get("id"))
+        if osm_id is None:
+            continue
         tags = {t.get("k"): t.get("v") for t in el if t.tag == "tag"}
         tags_json = json.dumps(dict(sorted(tags.items())),
                                separators=(",", ":"))
         if el.tag == "node":
-            nid = int(el.get("id"))
-            nodes[nid] = (float(el.get("lon")), float(el.get("lat")),
-                          tags_json)
+            lon = _coord(el.get("lon"), 180.0)
+            lat = _coord(el.get("lat"), 90.0)
+            if lon is not None and lat is not None:
+                nodes[osm_id] = (lon, lat, tags_json)
         elif el.tag == "way":
-            refs = [int(nd.get("ref")) for nd in el if nd.tag == "nd"]
+            refs = [_int(nd.get("ref")) for nd in el if nd.tag == "nd"]
             refs = [r for r in refs if r in nodes]  # reader.rs:93-99
-            ways.append((int(el.get("id")), refs, tags_json))
+            ways.append((osm_id, refs, tags_json))
         elif el.tag == "relation":
             members = [
-                {"role": m.get("role"), "type": m.get("type"),
-                 "ref": int(m.get("ref"))}
+                {"role": m.get("role"), "type": m.get("type"), "ref": ref}
                 for m in el if m.tag == "member"
+                for ref in [_int(m.get("ref"))] if ref is not None
             ]
-            rows.append((doc_id, "relation", int(el.get("id")),
+            rows.append((doc_id, "relation", osm_id,
                          None, None, None,
                          json.dumps(members, separators=(",", ":")),
                          tags_json))

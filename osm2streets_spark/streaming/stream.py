@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
 
-from ..plans.pipeline import build_street_network
+from ..plans.pipeline import convert_features
 
 SPANS_SCHEMA = StructType([
     StructField("doc_id", StringType()),
@@ -36,8 +36,9 @@ def stream_street_network(spark: SparkSession, input_dir: str,
                           output_dir: str, checkpoint_dir: str,
                           trigger_available_now: bool = True):
     """Incrementally convert arriving document files into rendered
-    feature parquet. Each micro-batch runs the full batch pipeline —
-    correct because no operator crosses documents."""
+    feature parquet. Each micro-batch runs the batch feature pass
+    (convert_features) — correct because no operator crosses
+    documents."""
     stream = (
         spark.readStream.schema(SPANS_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -47,11 +48,7 @@ def stream_street_network(spark: SparkSession, input_dir: str,
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        net = build_street_network(batch_df.sparkSession, batch_df)
-        (net["features"]
-         .select("doc_id", "feature_type", "feature_id", "feature_json",
-                 "tile_z", "tile_x", "tile_y", "quadkey")
-         .write.mode("append").parquet(output_dir))
+        convert_features(batch_df).write.mode("append").parquet(output_dir)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -26,8 +26,11 @@ from osm2streets_spark.plans.pipeline import (
 # (25→35): every former InMemoryRelation reference to the parse frame is
 # now a checkpoint-boundary scan — same count of references, different
 # node type, one extra actual boundary (the parse materialization).
+# The features ceiling fell 52→1 / 35→0 when the feature table became
+# one per-document kernel pass (convert_features): the load_documents
+# doc_id repartition is its only exchange, and it reads no checkpoint.
 _CEILINGS = {
-    "features": (52, 35),
+    "features": (1, 0),
     "roads": (4, 2),
     "trims": (4, 2),
     "intersections": (52, 34),
